@@ -535,14 +535,14 @@ def unigram_frequency_scores(
     materialized ONCE via ``localCheckpoint`` — the same
     single-materialization pattern as ``selection.global_prefix_sum``.
     """
+    from ..operators.scale import materialize
+
     terms = df.select(
         F.col(id_col),
         F.explode(word_tokens(F.col(text_col))).alias("token"),
     )
-    tf = (
-        terms.groupBy(id_col, "token")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=True)
+    tf = materialize(
+        terms.groupBy(id_col, "token").agg(F.count(F.lit(1)).alias("tf"))
     )
     counts = tf.groupBy("token").agg(F.sum("tf").alias("c"))
     totals = counts.agg(
@@ -633,11 +633,12 @@ def vocab_coverage_curve(
     """
     from pyspark.sql import Window
 
-    uni = (
+    from ..operators.scale import materialize
+
+    uni = materialize(
         df.select(F.explode(word_tokens(F.col(text_col))).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("token_count"))
-        .localCheckpoint(eager=True)
     )
     total = uni.agg(F.sum("token_count").alias("n")).collect()[0]["n"] or 0
     top = uni.orderBy(F.desc("token_count"), "token").limit(top_n)
@@ -834,6 +835,8 @@ def source_quality_profile(
     which the k·MAD outlier rule absorbs by design.  Ship
     ``exact=False`` at scale.
     """
+    from ..operators.scale import materialize
+
     q = quality_columns(text_col)
     if metric not in q:
         raise ValueError(f"unknown quality metric {metric!r}")
@@ -843,9 +846,11 @@ def source_quality_profile(
             return F.percentile(col, F.lit(0.5))
         return F.percentile_approx(col, F.lit(0.5), F.lit(approx_accuracy))
 
-    vals = df.select(
-        F.col(source_col).alias("source"), q[metric].alias("_v")
-    ).filter(F.col("_v").isNotNull()).localCheckpoint(eager=True)
+    vals = materialize(
+        df.select(
+            F.col(source_col).alias("source"), q[metric].alias("_v")
+        ).filter(F.col("_v").isNotNull())
+    )
     med = vals.groupBy("source").agg(
         _median(F.col("_v")).alias("_med"),
         F.count(F.lit(1)).alias("n_docs"),

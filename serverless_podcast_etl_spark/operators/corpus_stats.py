@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import word_tokens
 from . import dedup
-from .scale import ensure_parallelism, local_frame
+from .scale import ensure_parallelism, local_frame, materialize
 
 
 def ngram_novelty_scores(
@@ -121,10 +121,8 @@ def source_divergence(
     # checkpoint the corpus explode + (source, token) groupBy runs
     # twice, and the collected totals could diverge from the plan's
     # snapshot under non-deterministic upstream.
-    st = (
-        tok.groupBy("source", "token")
-        .agg(F.count(F.lit(1)).alias("c_st"))
-        .localCheckpoint(eager=True)
+    st = materialize(
+        tok.groupBy("source", "token").agg(F.count(F.lit(1)).alias("c_st"))
     )
     tot = st.groupBy("token").agg(F.sum("c_st").alias("c_t"))
     # ONE bounded collect (≤ #distinct sources rows — the operator
@@ -218,11 +216,10 @@ def collocation_lift(
     # grand-total collect below AND both sides of the returned plan's
     # joins — without it the tokenize+explode+groupBy re-runs as a
     # separate job just to produce one number
-    uni = (
+    uni = materialize(
         bound.select(F.explode("_t").alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
     )
     m = F.size("_t") - 1
     pairs = F.when(

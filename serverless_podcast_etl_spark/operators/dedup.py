@@ -10,24 +10,25 @@ each scales as (corpus size × duplicate density), not corpus².
 Portable hashing (functions/hashing.py) keeps MinHash/SimHash
 signatures bit-identical between Spark and the DuckDB oracle.
 
-``materialize=True`` contract (every knob in this module, ADVICE
-r12): the default eagerly ``localCheckpoint``s the expensive hashing
-scan at its fan-out, which (a) runs a Spark job at
-DataFrame-CONSTRUCTION time, (b) truncates lineage — localCheckpoint
+Materialization contract (ADVICE r12): the hashing scans that fan
+out to several consumers are pinned ONCE through the package's single
+eager seam, ``operators.scale.materialize``, which (a) runs a Spark
+job at DataFrame-CONSTRUCTION time, so these operators are
+batch-only, (b) truncates lineage — the default ``localCheckpoint``
 blocks live on executor local storage, NOT a reliable store, so on a
-cluster with executor loss/preemption the blocks are unrecoverable
-and the job fails rather than recomputing (same trade
-``warehouse.py`` makes; use ``df.checkpoint()`` to a reliable dir if
-your cluster preempts), and (c) stops Catalyst pushing downstream
-filters/column pruning past the checkpoint into the source scan —
-irrelevant for these operators' own plans (every consumer below the
-fan-out reads ALL checkpointed columns, and the outputs are computed
-pair/score columns no source-level pushdown could reach), but a
-caller composing extra source-column predicates UNDER one of these
-operators should apply them to ``df`` first.  Pass
-``materialize=False`` for the lazy zero-side-effect composition
-(mandatory in streaming plans; parity-tested in
-tests/test_materialize_parity.py).
+cluster with executor loss/preemption they are unrecoverable and the
+job fails rather than recomputing (the connected-components loops
+take ``checkpoint_dir=`` for the reliable mode), and (c) stops
+Catalyst pushing downstream filters/column pruning past the
+checkpoint into the source scan — irrelevant for these operators' own
+plans (every consumer below the fan-out reads ALL checkpointed
+columns, and the outputs are computed pair/score columns no
+source-level pushdown could reach), but a caller composing extra
+source-column predicates UNDER one of these operators should apply
+them to ``df`` first.  Only ``incremental_neardup_admission`` keeps a
+lazy mode (``materialize=False``): the streaming admission gate
+re-plans it every micro-batch, where re-checkpointing the corpus per
+batch costs more than the repeated scans.
 """
 
 from __future__ import annotations
@@ -36,7 +37,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import hashing
-from .scale import ensure_parallelism
+from . import scale
+from .scale import ensure_parallelism, resolve_checkpoint_dir
 
 
 def exact_dedup(
@@ -122,8 +124,8 @@ def shared_token_hash48(
     asking for a different shingle width falls back to folding from
     ``_th48`` rather than silently reading the wrong space.
 
-    The eager ``localCheckpoint`` makes this batch-only (the fact-18
-    materialize contract in this module's docstring applies)."""
+    The eager materialization makes this batch-only (the fact-18
+    materialization contract in this module's docstring applies)."""
     from ..functions.text import word_tokens_spark_sql
 
     h48 = F.expr(
@@ -131,7 +133,7 @@ def shared_token_hash48(
     )
     bound = _once(ensure_parallelism(df), id_col, h48, "_th48")
     if shingle_n is None:
-        return bound.localCheckpoint(eager=True)
+        return scale.materialize(bound)
     # bind the 32-bit view behind a second Generate (explode keeps the
     # other columns) so the fold's slices read a bound array instead
     # of re-evaluating the mod-transform per reference (fact 31)
@@ -142,13 +144,15 @@ def shared_token_hash48(
             F.array(F.expr(f"transform(_th48, h -> h % {hashing.U32})"))
         ).alias("_th"),
     )
-    return b2.select(
-        F.col(id_col),
-        F.col("_th48"),
-        F.expr(
-            hashing.shingle_hash_array_spark_sql("_th", shingle_n)
-        ).alias(f"_h32s{shingle_n}"),
-    ).localCheckpoint(eager=True)
+    return scale.materialize(
+        b2.select(
+            F.col(id_col),
+            F.col("_th48"),
+            F.expr(
+                hashing.shingle_hash_array_spark_sql("_th", shingle_n)
+            ).alias(f"_h32s{shingle_n}"),
+        )
+    )
 
 
 def _bound_token_hashes(
@@ -235,7 +239,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.2,
     max_doc_freq: int | None = None,
-    materialize: bool = True,
     hashes48: DataFrame | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs by word-n-gram Jaccard similarity.
@@ -255,20 +258,19 @@ def ngram_jaccard_pairs(
     BOTH numerator and denominators (self-consistent and
     oracle-expressible).
 
-    ``materialize`` (default) ``localCheckpoint``s the shingle table
-    at its fan-out (NOTES fact 18 — the doc-freq cap, the size agg
-    and the self-join's exchange-shared side each re-ran the
-    tokenize→md5 scan): every consumer reads one executed scan.
-    Batch-only; pass ``False`` for lazy/streaming composition.
+    The shingle table is materialized at its fan-out (NOTES fact 18
+    — the doc-freq cap, the size agg and the self-join's
+    exchange-shared side each re-ran the tokenize→md5 scan): every
+    consumer reads one executed scan.  Batch-only.
 
     ``hashes48`` (a ``shared_token_hash48`` frame) shares the
     tokenize→md5 scan with other detectors over the same corpus
     (bit-identical shingles — the capped similarity space is derived
     downstream and unaffected).
     """
-    sh = shingles(df, text_col, id_col, n=n, hashes48=hashes48)
-    if materialize:
-        sh = sh.localCheckpoint(eager=True)
+    sh = scale.materialize(
+        shingles(df, text_col, id_col, n=n, hashes48=hashes48)
+    )
     if max_doc_freq is not None:
         keep = (
             sh.groupBy("shingle")
@@ -312,7 +314,6 @@ def containment_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_doc_freq: int | None = 50,
-    materialize: bool = True,
 ) -> DataFrame:
     """Asymmetric near-dup pairs by n-gram CONTAINMENT — the
     doc-inside-doc detector Jaccard structurally misses.
@@ -345,15 +346,12 @@ def containment_pairs(
     raising it past the cluster-size bound only buys boilerplate
     pairs.
 
-    ``materialize`` (default) ``localCheckpoint``s the shingle table
-    at its fan-out, exactly as in ``ngram_jaccard_pairs`` (measured
-    3.10 → 1.98 s on the q110 shape at sf0.1 together with the
-    ``shingles`` distinct-shuffle removal); ``False`` keeps the lazy
-    composition.
+    The shingle table is materialized at its fan-out, exactly as in
+    ``ngram_jaccard_pairs`` (measured 3.10 → 1.98 s on the q110 shape
+    at sf0.1 together with the ``shingles`` distinct-shuffle
+    removal).
     """
-    sh = shingles(df, text_col, id_col, n=n)
-    if materialize:
-        sh = sh.localCheckpoint(eager=True)
+    sh = scale.materialize(shingles(df, text_col, id_col, n=n))
     if max_doc_freq is not None:
         keep = (
             sh.groupBy("shingle")
@@ -445,7 +443,7 @@ def minhash_signatures(
     candidate bucket of every short doc in the corpus.
     """
     return _signatures_from_arrays(
-        _shingle_arrays(df, text_col, id_col, n, materialize=False),
+        _shingle_arrays(df, text_col, id_col, n),
         id_col,
         num_hashes,
     )
@@ -456,35 +454,23 @@ def _shingle_arrays(
     text_col: str,
     id_col: str,
     n: int,
-    materialize: bool = True,
     hashes48: DataFrame | None = None,
 ) -> DataFrame:
     """``(id, _h32s array<long>)`` — each doc's word-n-gram shingle
     hashes behind the ``_once`` Generate barrier, shingle-less docs
-    dropped.  ``materialize`` ``localCheckpoint``s the frame at its
+    dropped.  Lazy; the multi-consumer callers materialize it at its
     fan-out (NOTES fact 18) so signature, banding, and verify
-    consumers all read ONE executed tokenize→md5→fold scan; pass
-    ``False`` for lazy single-consumer/streaming compositions.
+    consumers all read ONE executed tokenize→md5→fold scan.
     ``hashes48`` (a ``shared_token_hash48`` frame) replaces the
     tokenize→md5 part of that scan with the cross-detector shared
-    materialization — same shingle hashes bit-for-bit.  When the
-    shared frame was built with a MATCHING ``shingle_n`` (its
-    ``_h32s{n}`` column), the pre-folded shingle arrays are read
-    straight from it — no second materialization pass at all."""
-    if hashes48 is not None and f"_h32s{n}" in hashes48.columns:
-        # the shared checkpoint already stores this width's folds;
-        # consumers project + filter it directly (it IS materialized)
-        return hashes48.select(
-            F.col(id_col), F.col(f"_h32s{n}").alias("_h32s")
-        ).filter(F.size(F.col("_h32s")) > 0)
+    materialization — same shingle hashes bit-for-bit."""
     bound = _bound_token_hashes(df, text_col, id_col, hashes48=hashes48)
-    harr = _once(
+    return _once(
         bound,
         id_col,
         F.expr(hashing.shingle_hash_array_spark_sql("_th", n)),
         "_h32s",
     ).filter(F.size(F.col("_h32s")) > 0)
-    return harr.localCheckpoint(eager=True) if materialize else harr
 
 
 def _signatures_from_arrays(
@@ -560,7 +546,6 @@ def minhash_lsh_pairs(
     bands: int = 4,
     verify_threshold: float = 0.2,
     prune_verify: bool = False,
-    materialize: bool = True,
     hashes48: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup pairs via MinHash banding + exact Jaccard verification.
@@ -572,19 +557,16 @@ def minhash_lsh_pairs(
     candidate pairs (the whole point of LSH: verification cost scales
     with candidates, never with all n² pairs).
 
-    ``materialize`` (default) ``localCheckpoint``s the per-doc
-    shingle-hash ARRAY frame once at its fan-out (NOTES fact 18): the
-    banding side and BOTH verify shingle sides read the materialized
-    arrays, the per-doc shingle-set sizes become an in-row
-    ``size(array_distinct(...))`` (no groupBy shuffle at all), and
-    the tokenize→md5 scan runs exactly once — where the lazy plan
-    re-ran it per differently-keyed consumer (the band self-join's
-    two sides dedupe via ReusedExchange, but the verify sides shuffle
-    on different keys and cannot).  Measured 1.92 → 1.00 s at sf0.1,
-    parity exact.  The checkpoint makes the call batch-only;
-    ``materialize=False`` keeps the original pure-lazy composition
-    (streaming-safe, e.g. under ``transformWithState``-free
-    foreachBatch callers that re-plan per micro-batch).
+    The per-doc shingle-hash ARRAY frame is materialized once at its
+    fan-out (NOTES fact 18): the banding side and BOTH verify shingle
+    sides read the materialized arrays, the per-doc shingle-set sizes
+    become an in-row ``size(array_distinct(...))`` (no groupBy
+    shuffle at all), and the tokenize→md5 scan runs exactly once —
+    where a lazy plan re-runs it per differently-keyed consumer (the
+    band self-join's two sides dedupe via ReusedExchange, but the
+    verify sides shuffle on different keys and cannot).  Measured
+    1.92 → 1.00 s at sf0.1.  The checkpoint makes the call
+    batch-only.
 
     ``prune_verify`` broadcast-semi-joins the shingle tables down to
     candidate doc ids before the (id, shingle) verify shuffle.  Default
@@ -601,37 +583,33 @@ def minhash_lsh_pairs(
     corpus/text/id) lets an ENSEMBLE caller share the tokenize→md5
     scan with other detectors — the shingle fold then derives from
     the shared materialization instead of re-hashing (bit-identical
-    output; requires ``materialize=True``, since the shared frame is
-    itself an eager checkpoint).
+    output).  When the shared frame was built with a MATCHING
+    ``shingle_n`` (its ``_h32s{n}`` column), the pre-folded shingle
+    arrays are read straight from it — no second materialization pass
+    at all.
     """
-    if hashes48 is not None and not materialize:
-        raise ValueError(
-            "minhash_lsh_pairs: hashes48 requires materialize=True "
-            "(the shared scan is an eager checkpoint — a lazy "
-            "composition cannot consume it)"
-        )
-    if materialize:
-        harr = _shingle_arrays(df, text_col, id_col, n, hashes48=hashes48)
-        banded = _bands_from_signatures(
-            _signatures_from_arrays(harr, id_col, num_hashes),
-            id_col, num_hashes, bands,
-        )
-        sh = harr.select(
-            F.col(id_col),
-            F.explode(F.array_distinct("_h32s")).alias("shingle"),
-        )
-        sizes = harr.select(
-            F.col(id_col),
-            F.size(F.array_distinct("_h32s")).alias("n_shingles"),
-        )
+    if hashes48 is not None and f"_h32s{n}" in hashes48.columns:
+        # the shared checkpoint already stores this width's folds;
+        # consumers project + filter it directly (it IS materialized)
+        harr = hashes48.select(
+            F.col(id_col), F.col(f"_h32s{n}").alias("_h32s")
+        ).filter(F.size(F.col("_h32s")) > 0)
     else:
-        banded = minhash_bands(
-            df, text_col, id_col, n=n, num_hashes=num_hashes, bands=bands
+        harr = scale.materialize(
+            _shingle_arrays(df, text_col, id_col, n, hashes48=hashes48)
         )
-        sh = shingles(df, text_col, id_col, n=n)
-        sizes = sh.groupBy(id_col).agg(
-            F.count(F.lit(1)).alias("n_shingles")
-        )
+    banded = _bands_from_signatures(
+        _signatures_from_arrays(harr, id_col, num_hashes),
+        id_col, num_hashes, bands,
+    )
+    sh = harr.select(
+        F.col(id_col),
+        F.explode(F.array_distinct("_h32s")).alias("shingle"),
+    )
+    sizes = harr.select(
+        F.col(id_col),
+        F.size(F.array_distinct("_h32s")).alias("n_shingles"),
+    )
     a = banded.select(F.col(id_col).alias("id_a"), "band", "bucket")
     b = banded.select(F.col(id_col).alias("id_b"), "band", "bucket")
     candidates = (
@@ -729,7 +707,7 @@ def incremental_neardup_admission(
     the incremental gate should enable it even though local bench
     scale measures it as overhead.
 
-    ``materialize`` (default) ``localCheckpoint``s each side's
+    ``materialize`` (default) materializes each side's
     shingle-hash arrays at their fan-out (banding + verify shingles +
     sizes — NOTES fact 18), so the batch is hashed once, and the
     corpus once instead of up to three times WHEN it is being signed
@@ -741,7 +719,9 @@ def incremental_neardup_admission(
     the corpus per batch costs more than the repeated scans).
     """
     if materialize:
-        harr_new = _shingle_arrays(new_df, text_col, id_col, n)
+        harr_new = scale.materialize(
+            _shingle_arrays(new_df, text_col, id_col, n)
+        )
         nb = _bands_from_signatures(
             _signatures_from_arrays(harr_new, id_col, num_hashes),
             id_col, num_hashes, bands,
@@ -768,7 +748,9 @@ def incremental_neardup_admission(
     harr_old = None
     if corpus_bands is None:
         if materialize:
-            harr_old = _shingle_arrays(corpus_df, text_col, id_col, n)
+            harr_old = scale.materialize(
+                _shingle_arrays(corpus_df, text_col, id_col, n)
+            )
             corpus_bands = _bands_from_signatures(
                 _signatures_from_arrays(harr_old, id_col, num_hashes),
                 id_col, num_hashes, bands,
@@ -1103,63 +1085,6 @@ def bloom_cross_corpus_overlap(
     )
 
 
-def _resolve_checkpoint_dir(
-    df: DataFrame, checkpoint_dir: str | None
-) -> str | None:
-    """Set the session checkpoint dir ONCE per iterative-operator
-    invocation and return the RESOLVED per-run directory (Spark
-    appends a fresh UUID subdir on every ``setCheckpointDir`` call,
-    so the resolved path is unique to this invocation).
-
-    Re-pointing the dir on every materialization (pre-r4 behavior)
-    mutates global SparkContext state per call: two concurrent runs
-    with different ``checkpoint_dir``s would each re-point the shared
-    dir and silently write blocks into each other's directories.
-    Resolving once up front and asserting the dir is unchanged at
-    every subsequent materialization (``_materialize``) turns that
-    silent cross-write into a loud error.
-    """
-    if checkpoint_dir is None:
-        return None
-    sc = df.sparkSession.sparkContext
-    sc.setCheckpointDir(checkpoint_dir)
-    return sc.getCheckpointDir()
-
-
-def _materialize(df: DataFrame, resolved_dir: str | None) -> DataFrame:
-    """Eagerly materialize an iterative loop's frame, truncating
-    lineage.
-
-    ``resolved_dir=None`` → ``localCheckpoint``: blocks live on
-    executor storage — fastest, but an executor loss makes them
-    unrecoverable (the lineage needed to recompute was truncated).
-    Fine on local[n] and for short interactive loops.
-
-    ``resolved_dir`` set (the per-run directory returned by
-    ``_resolve_checkpoint_dir``) → RELIABLE ``checkpoint()`` into
-    that directory (HDFS/S3/DBFS path at cluster scale): blocks
-    survive executor loss, which is the mode a 100 TB run must use —
-    over a multi-hour iterative job on 1000 executors, losing one
-    executor mid-loop is the expected case, not the exception.
-    Raises if another run re-pointed the session checkpoint dir
-    mid-loop (concurrent iterative runs in one session must use
-    distinct SparkSessions or be serialized).
-    """
-    if resolved_dir is None:
-        return df.localCheckpoint(eager=True)
-    sc = df.sparkSession.sparkContext
-    current = sc.getCheckpointDir()
-    if current != resolved_dir:
-        raise RuntimeError(
-            "reliable-checkpoint dir changed mid-run (expected "
-            f"{resolved_dir!r}, found {current!r}): a concurrent "
-            "iterative run re-pointed the session checkpoint dir. "
-            "Run iterative operators with conflicting checkpoint_dirs "
-            "in separate SparkSessions, or serialize them."
-        )
-    return df.checkpoint(eager=True)
-
-
 def _cc_min_label_step(edges: DataFrame, labels: DataFrame) -> DataFrame:
     """One min-label-propagation + pointer-jump iteration, returned
     PRE-checkpoint: (_id, _comp, _new) where ``_new`` is the improved
@@ -1280,8 +1205,8 @@ def connected_components(
     materialization — ``checkpoint_dir=None`` uses ``localCheckpoint``
     (local/default), a real path switches to RELIABLE
     ``df.checkpoint()`` so a 100 TB run survives executor loss
-    mid-loop (see ``_materialize``).  Dup clusters are shallow (stars
-    around a template), so 2-4 rounds is typical.  Raises if
+    mid-loop (see ``scale.materialize``).  Dup clusters are shallow
+    (stars around a template), so 2-4 rounds is typical.  Raises if
     ``max_iter`` rounds don't converge — a silently partial labeling
     must never reach a dedup decision.  Only nodes that appear in
     ``pairs`` are returned — isolated docs are their own (implicit)
@@ -1308,11 +1233,11 @@ def connected_components(
     silently dropping a null-endpoint edge (what a bare equi-join
     would do) could split a component and ship a wrong dedup decision.
     """
-    ckpt = _resolve_checkpoint_dir(pairs, checkpoint_dir)
+    ckpt = resolve_checkpoint_dir(pairs, checkpoint_dir)
     # materialize the upstream pair pipeline ONCE (e.g. the whole
     # MinHash-LSH candidate generation) — both the small-graph fast
     # path (count + collect) and the iterative loop read these rows
-    sym = _materialize(
+    sym = scale.materialize(
         pairs.select(F.col(id_a).alias("_a"), F.col(id_b).alias("_b")), ckpt
     )
     # One contract for both backends (r4 ADVICE): a null id is
@@ -1340,12 +1265,12 @@ def connected_components(
     # union-find parent map at ≤1M entries (tens of MB driver-side)
     if small_graph_max and stats["_n"] <= small_graph_max:
         return _cc_driver_union_find(sym, "_a", "_b", out_id, out_comp)
-    edges = _materialize(
+    edges = scale.materialize(
         sym.union(sym.select(F.col("_b").alias("_a"), F.col("_a").alias("_b")))
         .distinct(),
         ckpt,
     )
-    labels = _materialize(
+    labels = scale.materialize(
         edges.select(F.col("_a").alias("_id"))
         .distinct()
         .withColumn("_comp", F.col("_id")),
@@ -1355,7 +1280,7 @@ def connected_components(
     for _ in range(max_iter):
         # materialize BEFORE the convergence count so the joins run
         # once per iteration (the count then reads materialized rows)
-        updated = _materialize(
+        updated = scale.materialize(
             _cc_min_label_step(edges, labels), ckpt
         )
         n_changed = updated.filter(F.col("_new") != F.col("_comp")).count()
@@ -1772,8 +1697,6 @@ def strip_spans(
     through untouched.  One equi-join on the doc key, no shuffle of
     the corpus beyond it.
     """
-    from .scale import ensure_parallelism
-
     span_arrays = spans.groupBy(id_col).agg(
         F.collect_list(
             F.struct(
@@ -1977,12 +1900,12 @@ def connected_components_star(
             )
         return canon(emitted)
 
-    ckpt = _resolve_checkpoint_dir(pairs, checkpoint_dir)
-    edges = _materialize(
+    ckpt = resolve_checkpoint_dir(pairs, checkpoint_dir)
+    edges = scale.materialize(
         canon(pairs.select(F.col(id_a).alias("_u"), F.col(id_b).alias("_v"))),
         ckpt,
     )
-    nodes = _materialize(
+    nodes = scale.materialize(
         # from the RAW pairs, not the canon'd edges: canon drops
         # self-loops, but a node appearing ONLY as (x, x) must still
         # label itself (min-label backend contract; r4 parity fix)
@@ -1994,7 +1917,7 @@ def connected_components_star(
     converged = False
     for _ in range(max_iter):
         stepped = star_round(star_round(edges, large=True), large=False)
-        stepped = _materialize(stepped, ckpt)
+        stepped = scale.materialize(stepped, ckpt)
         changed = (
             stepped.exceptAll(edges).count() + edges.exceptAll(stepped).count()
         )
@@ -2220,8 +2143,8 @@ def neardup_ensemble(
     — orders of magnitude smaller than the corpus), one (id_a, id_b)
     hash shuffle groups them, and CC runs on exactly that bounded
     edge set; the corpus itself is never touched here.  The
-    adjudicated table is MATERIALIZED once (``_materialize``, the CC
-    loop's own lineage-truncation contract — pass
+    adjudicated table is MATERIALIZED once (``scale.materialize``,
+    the CC loop's own lineage-truncation contract — pass
     ``checkpoint_dir=...`` through ``cc_kwargs`` for the reliable
     mode) because two consumers read it: the component computation
     and the output join.  Without that, every member's full candidate
@@ -2258,9 +2181,9 @@ def neardup_ensemble(
     )
     # two consumers (CC + output join) — materialize the member
     # pipelines once; see the docstring's scale note
-    adjudicated = _materialize(
+    adjudicated = scale.materialize(
         adjudicated,
-        _resolve_checkpoint_dir(
+        resolve_checkpoint_dir(
             adjudicated, cc_kwargs.get("checkpoint_dir")
         ),
     )
@@ -2341,7 +2264,6 @@ def incremental_refresh(
     verify_threshold: float = 0.3,
     prune_verify: bool = False,
     corpus_bands: DataFrame | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Continuous-crawl corpus refresh — ``snapshot_diff`` composed
     with ``incremental_neardup_admission``, the end-to-end shape of a
@@ -2394,7 +2316,6 @@ def incremental_refresh(
         verify_threshold=verify_threshold,
         prune_verify=prune_verify,
         corpus_bands=corpus_bands,
-        materialize=materialize,
     )
     return adm.join(ingest_ids, id_col).select(
         id_col, "status", "n_matches", "admitted"

@@ -37,7 +37,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import word_tokens
-from .scale import ensure_parallelism
+from .scale import ensure_parallelism, materialize
 
 
 def _idf(df_col: Column, n_docs: int, form: str) -> Column:
@@ -378,7 +378,7 @@ def bm25_probe_topk(
         # the queries frame feeds BOTH the vocabulary collect and the
         # scoring join below — pin it at the fork (fact 18, the
         # trained_ivf_probe_topk convention; bounded by contract)
-        queries = queries.localCheckpoint(eager=True)
+        queries = materialize(queries)
         terms = [
             r["t"]
             for r in queries.select(
@@ -573,9 +573,7 @@ def retrieval_agreement(
         )
         for n in names
     ]
-    u = reduce(lambda a, b: a.unionByName(b), tagged).localCheckpoint(
-        eager=True
-    )
+    u = materialize(reduce(lambda a, b: a.unionByName(b), tagged))
 
     pairs = [(a, b) for i, a in enumerate(names) for b in names[i + 1 :]]
     pair_lits = F.array(
@@ -685,8 +683,7 @@ def bm25_prf_topk(
         n_docs, total_dl = stats["n_docs"], stats["total_dl"]
         # three consumers on different keys below -> materialize the
         # postings at the fork (facts 18/19)
-        postings = build_bm25_index(corpus, corpus_id, text_col)
-        postings = postings.localCheckpoint(eager=True)
+        postings = materialize(build_bm25_index(corpus, corpus_id, text_col))
 
     fb = _score_postings(
         postings, queries, query_id, text_col,

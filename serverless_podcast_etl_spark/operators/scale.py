@@ -38,6 +38,12 @@ filesystems) are statted through the JVM Hadoop FileSystem; a file
 whose size cannot be determined AT ALL counts as
 ``maxPartitionBytes``-sized, so an unknown-size input passes through
 rather than paying a speculative full shuffle.
+
+``materialize`` is the package's one eager-checkpoint seam: every
+operator that pins a fan-out (NOTES fact 18) or truncates an
+iterative loop's lineage calls it, and nothing else calls
+``localCheckpoint``/``checkpoint`` (pinned by
+tests/test_materialize_seam.py).
 """
 
 from __future__ import annotations
@@ -254,3 +260,65 @@ def ensure_parallelism(df: DataFrame, min_factor: int = 1) -> DataFrame:
     if est >= target:
         return df
     return df.repartition(target)
+
+
+def resolve_checkpoint_dir(
+    df: DataFrame, checkpoint_dir: str | None
+) -> str | None:
+    """Set the session checkpoint dir ONCE per iterative-operator
+    invocation and return the RESOLVED per-run directory (Spark
+    appends a fresh UUID subdir on every ``setCheckpointDir`` call,
+    so the resolved path is unique to this invocation).
+
+    Re-pointing the dir on every materialization (pre-r4 behavior)
+    mutates global SparkContext state per call: two concurrent runs
+    with different ``checkpoint_dir``s would each re-point the shared
+    dir and silently write blocks into each other's directories.
+    Resolving once up front and asserting the dir is unchanged at
+    every subsequent ``materialize`` turns that silent cross-write
+    into a loud error.
+    """
+    if checkpoint_dir is None:
+        return None
+    sc = df.sparkSession.sparkContext
+    sc.setCheckpointDir(checkpoint_dir)
+    return sc.getCheckpointDir()
+
+
+def materialize(df: DataFrame, resolved_dir: str | None = None) -> DataFrame:
+    """Eagerly materialize ``df``, truncating its lineage — runs one
+    Spark job at DataFrame-construction time, so callers are
+    batch-only.
+
+    ``resolved_dir=None`` → ``localCheckpoint``: blocks live on
+    executor storage — fastest, but an executor loss makes them
+    unrecoverable (the lineage needed to recompute was truncated).
+    Fine on local[n] and for the bounded fan-out pins the operators
+    place.
+
+    ``resolved_dir`` set (the per-run directory returned by
+    ``resolve_checkpoint_dir``) → RELIABLE ``checkpoint()`` into
+    that directory (HDFS/S3/DBFS path at cluster scale): blocks
+    survive executor loss, which is the mode a 100 TB iterative run
+    must use — over a multi-hour job on 1000 executors, losing one
+    executor mid-loop is the expected case, not the exception.
+    Raises if another run re-pointed the session checkpoint dir
+    mid-loop (concurrent iterative runs in one session must use
+    distinct SparkSessions or be serialized).
+
+    Either way no downstream filter or column pruning reaches past
+    the checkpoint into the source scan — pre-filter the input.
+    """
+    if resolved_dir is None:
+        return df.localCheckpoint(eager=True)
+    sc = df.sparkSession.sparkContext
+    current = sc.getCheckpointDir()
+    if current != resolved_dir:
+        raise RuntimeError(
+            "reliable-checkpoint dir changed mid-run (expected "
+            f"{resolved_dir!r}, found {current!r}): a concurrent "
+            "iterative run re-pointed the session checkpoint dir. "
+            "Run iterative operators with conflicting checkpoint_dirs "
+            "in separate SparkSessions, or serialize them."
+        )
+    return df.checkpoint(eager=True)

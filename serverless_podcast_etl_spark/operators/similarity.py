@@ -23,39 +23,20 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import literals
-from .scale import ensure_parallelism
+from .scale import ensure_parallelism, materialize
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v
-        )
-    )
-
-
-# -- one-call SQL twins of the expression builders (opt-r15) ------------------
+# -- one-call SQL expression builders (opt-r15) -----------------------------
 #
-# Each Python-side higher-order builder above costs dozens of py4j
-# round-trips per use (every F.* call and Column operator is one
-# driver↔JVM message; a lambda alone is ~10 — NOTES fact 26 measured
-# the storm at 0.7-1.0 ms per trip under load).  The SQL-string twins
-# below hand the SAME expression to the JVM parser in ONE ``F.expr``
-# round-trip: same functions, same literal types (0.0D doubles,
-# CAST(0 AS BIGINT) init values), same evaluation order — the parsed
-# tree is semantically identical to the Python-built one (the only
-# visible difference is lambda-variable naming in explain output).
-# Bit-exactness is pinned by the full DuckDB oracle suite over every
-# consumer (q22/q27/q34/q36/q55/q62/q82/q117/q118/q119 + the
-# embedding near-dup family).
+# A Python-side higher-order builder (F.aggregate/F.zip_with/lambdas)
+# costs dozens of py4j round-trips per use (every F.* call and Column
+# operator is one driver↔JVM message; a lambda alone is ~10 — NOTES
+# fact 26 measured the storm at 0.7-1.0 ms per trip under load).  The
+# SQL-string builders below hand the same expression to the JVM parser
+# in ONE ``F.expr`` round-trip (0.0D doubles, CAST(0 AS BIGINT) init
+# values).  Bit-exactness is pinned by the full DuckDB oracle suite
+# over every consumer (q22/q27/q34/q36/q55/q62/q82/q117/q118/q119 +
+# the embedding near-dup family).
 
 
 def _dot_sql(a: str, b: str) -> str:
@@ -91,19 +72,6 @@ def _int_dot_sql(a: str, b: str) -> str:
 _INT_COSINE_SQL = (
     f"round(CAST({_int_dot_sql('_qq', '_cq')} AS DOUBLE) / (_qn * _cn), 4)"
 )
-
-
-def with_cosine(
-    df: DataFrame, a: str, b: str, out_col: str = "cosine", round_to: int | None = 4
-) -> DataFrame:
-    """Add cosine similarity between two array<double> columns."""
-    cos_sql = (
-        f"{_dot_sql(f'`{a}`', f'`{b}`')} / "
-        f"({_norm_sql(f'`{a}`')} * {_norm_sql(f'`{b}`')})"
-    )
-    if round_to is not None:
-        cos_sql = f"round({cos_sql}, {int(round_to)})"
-    return df.withColumn(out_col, F.expr(cos_sql))
 
 
 def _as_double(df: DataFrame, vec_col: str) -> DataFrame:
@@ -889,9 +857,9 @@ def semantic_neardup_pairs(
     # are not whole-stage-codegen'd), and the candidate join evaluates
     # it per PAIR — hoisting the two norms cuts the per-pair work to
     # the dot product alone (same doubles: sqrt once vs inline)
-    assigned = assigned.withColumn(
-        "_nrm", F.expr(_norm_sql(f"`{vec_col}`"))
-    ).localCheckpoint(eager=True)
+    assigned = materialize(
+        assigned.withColumn("_nrm", F.expr(_norm_sql(f"`{vec_col}`")))
+    )
     a = assigned.select(
         F.col(id_col).alias("id_a"),
         F.col(vec_col).alias("_va"),
@@ -1208,10 +1176,12 @@ def embedding_norm_outliers(
             return F.percentile(col, F.lit(0.5))
         return F.percentile_approx(col, F.lit(0.5), F.lit(approx_accuracy))
 
-    norms = _as_double(df, vec_col).select(
-        F.col(id_col),
-        F.expr(f"round({_norm_sql(f'`{vec_col}`')}, 6)").alias("norm"),
-    ).localCheckpoint(eager=True)
+    norms = materialize(
+        _as_double(df, vec_col).select(
+            F.col(id_col),
+            F.expr(f"round({_norm_sql(f'`{vec_col}`')}, 6)").alias("norm"),
+        )
+    )
     med = norms.agg(_median(F.col("norm")).alias("m")).collect()[0]["m"]
     med = float(med) if med is not None else 0.0
     devs = norms.select(
@@ -1381,10 +1351,10 @@ def train_kmeans_int8(
     if codes is None:
         if df is None:
             raise ValueError("train_kmeans_int8: pass df or codes")
-        codes = (
-            quantize_embeddings_int8(ensure_parallelism(df), id_col, vec_col)
-            .select(F.col(id_col), F.col("q"))
-            .localCheckpoint(eager=True)
+        codes = materialize(
+            quantize_embeddings_int8(
+                ensure_parallelism(df), id_col, vec_col
+            ).select(F.col(id_col), F.col("q"))
         )
     key = F.md5(
         F.encode(
@@ -1526,11 +1496,11 @@ def build_trained_ivf_index(
     undefined at norm 0 — so persisting them only wastes probe IO);
     they still participated in training via the codes frame.
     """
-    qc = quantize_embeddings_int8(
-        ensure_parallelism(corpus), id_col, vec_col
-    ).select(
-        F.col(id_col).alias("neighbor_id"), F.col("q")
-    ).localCheckpoint(eager=True)
+    qc = materialize(
+        quantize_embeddings_int8(
+            ensure_parallelism(corpus), id_col, vec_col
+        ).select(F.col(id_col).alias("neighbor_id"), F.col("q"))
+    )
     cents = train_kmeans_int8(
         None,
         id_col,
@@ -1614,7 +1584,7 @@ def trained_ivf_probe_topk(
         # fact 18: q fans out to the cell collect AND the scoring
         # join — pin it so quantize + the Arrow kernel run once
         # (queries are tiny by contract, so the pin is cheap)
-        q = q.localCheckpoint(eager=True)
+        q = materialize(q)
         cells = [
             r["cluster"] for r in q.select("cluster").distinct().collect()
         ]

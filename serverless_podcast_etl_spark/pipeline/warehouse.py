@@ -31,12 +31,14 @@ surrogate ids are zipWithIndex-free dense ranks per partition batch.
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import schemas
 from ..operators.aggregates import dedup_insert
+from ..operators.scale import materialize
 
 DIM_SCHEMAS = {
     "time_dimension": schemas.TIME_DIM,
@@ -47,12 +49,30 @@ DIM_SCHEMAS = {
 }
 
 
+def _local_root(root: str) -> str:
+    """The warehouse directory as a local path.  ``exists`` and
+    ``_disk_layout`` inspect the table dirs with ``os``, so a
+    ``file:`` URI maps to its path, and any other scheme raises: on a
+    remote root every table would read as absent and INSERT IGNORE
+    would silently degrade to a blind append of duplicates."""
+    parsed = urlparse(root)
+    if parsed.scheme == "file":
+        return unquote(parsed.path)
+    if parsed.scheme:
+        raise ValueError(
+            f"warehouse root {root!r}: only local paths and file: URIs "
+            f"are supported (INSERT IGNORE reads the table dirs with "
+            f"the local filesystem)"
+        )
+    return root
+
+
 class Warehouse:
     """A directory of parquet tables with idempotent appends."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
-        self.root = root
+        self.root = _local_root(root)
 
     def path(self, table: str) -> str:
         return os.path.join(self.root, table)
@@ -260,7 +280,7 @@ class Warehouse:
         merged = merged.select(*[f.name for f in DIM_SCHEMAS[table].fields])
         if self.exists(table):
             # break lineage so the overwrite doesn't read its own input
-            merged = merged.localCheckpoint(eager=True)
+            merged = materialize(merged)
         writer = merged.write.mode("overwrite")
         if partition_by:
             # dynamic mode: only partitions present in `merged` are

@@ -36,6 +36,7 @@ from ..operators import (
     similarity,
     windows,
 )
+from ..operators.scale import materialize
 from ..sources.tables import load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -2019,16 +2020,25 @@ def q62_ann_recall_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _build_exact() -> None:
         try:
-            exact_box["df"] = similarity.brute_force_topk(
-                queries_df, emb, query_id="vec_id", corpus_id="vec_id", k=10
-            ).localCheckpoint(eager=True)
-        except BaseException as e:  # re-raised on the main thread
+            exact_box["df"] = materialize(
+                similarity.brute_force_topk(
+                    queries_df, emb, query_id="vec_id", corpus_id="vec_id",
+                    k=10,
+                )
+            )
+        except Exception as e:  # re-raised on the main thread
             exact_box["err"] = e
 
     t = InheritableThread(target=_build_exact)
     t.start()
-    centroids = similarity.train_ivf_centroids(emb, n_clusters=16, seed=7)
-    t.join()
+    try:
+        centroids = similarity.train_ivf_centroids(
+            emb, n_clusters=16, seed=7
+        )
+    finally:
+        # joined on the error path too: a failed fit must not leave
+        # the checkpoint thread running past the call
+        t.join()
     if "err" in exact_box:
         raise exact_box["err"]
     exact = exact_box["df"]
@@ -2081,7 +2091,7 @@ def q60_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hit join + per-query k); checkpointing its ~50 rows pins the
     expensive exact scorer to one execution regardless of exchange
     reuse (same rationale as q62)."""
-    exact = q22_ann_topk(spark, sf_dir).localCheckpoint(eager=True)
+    exact = materialize(q22_ann_topk(spark, sf_dir))
     approx = q27_lsh_ann_topk(spark, sf_dir)
     return similarity.recall_at_k(approx, exact).orderBy("query_id")
 
@@ -4829,10 +4839,8 @@ def q121_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("doc_id"), "embedding"
     )
-    corpus = (
-        docs.join(emb, "doc_id")
-        .select("doc_id", "text", "embedding")
-        .localCheckpoint(eager=True)
+    corpus = materialize(
+        docs.join(emb, "doc_id").select("doc_id", "text", "embedding")
     )
     probes = corpus.filter(F.col("doc_id") < 3).select(
         "doc_id",

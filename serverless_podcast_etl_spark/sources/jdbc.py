@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .. import schemas
 from ..operators.aggregates import dedup_insert
+from ..operators.scale import materialize
 
 
 class JdbcTableStore:
@@ -108,9 +109,7 @@ class JdbcTableStore:
         """
         keys = keys or schemas.NATURAL_KEYS[table]
         existing_keys = self.read(table, columns=keys)
-        fresh = dedup_insert(existing_keys, incoming, keys).localCheckpoint(
-            eager=True
-        )
+        fresh = materialize(dedup_insert(existing_keys, incoming, keys))
         n = fresh.count()
         if n:
             self.append(table, fresh)

@@ -1,8 +1,8 @@
 """Round-7 advisor fixes, pinned: IVF index cluster-id base parity
 (spherical=False BLAS path vs probe_cells' 1-based convention),
 snapshot_diff NULL-text presence semantics, case-insensitive
-tracking-param stripping, the quantile_bins approx scale fence, and
-global_prefix_sum's one-slot persist eviction."""
+tracking-param stripping, and the quantile_bins approx scale
+fence."""
 
 from __future__ import annotations
 
@@ -13,10 +13,7 @@ from pyspark.sql import functions as F
 
 from serverless_podcast_etl_spark.functions.urls import canonical_url
 from serverless_podcast_etl_spark.operators.dedup import snapshot_diff
-from serverless_podcast_etl_spark.operators.selection import (
-    global_prefix_sum,
-    quantile_bins,
-)
+from serverless_podcast_etl_spark.operators.selection import quantile_bins
 from serverless_podcast_etl_spark.operators.similarity import (
     build_ivf_index,
     ivf_probe_topk,
@@ -174,39 +171,3 @@ def test_quantile_bins_approx_fence(spark):
         assert abs(exact_counts[b] - approx_counts[b]) <= 20, (
             b, exact_counts, approx_counts,
         )
-
-
-def test_global_prefix_sum_evicts_previous_persist(spark):
-    """materialize=False persists the ranged sort; a second call must
-    unpersist the first call's frame (one-slot tracking) so per-epoch
-    reshard loops hold at most one stale cache."""
-    from serverless_podcast_etl_spark.operators import selection as sel
-
-    df = spark.createDataFrame(
-        [(i, 10) for i in range(100)], "id long, cost long"
-    )
-    out1 = global_prefix_sum(
-        df, "cost", [F.col("id")], materialize=False
-    )
-    assert out1.count() == 100
-    assert len(sel._LAST_PERSISTED) == 1
-    first = sel._LAST_PERSISTED[0]
-    assert first.storageLevel.useMemory or first.storageLevel.useDisk
-
-    # a DIFFERENT input: Spark's cache manager is logical-plan-keyed,
-    # so a second call on the same frame would re-cache the same plan
-    # and mask the eviction in storageLevel
-    df2 = spark.createDataFrame(
-        [(i, 5) for i in range(50)], "id long, cost long"
-    )
-    out2 = global_prefix_sum(
-        df2, "cost", [F.col("id")], materialize=False
-    )
-    assert out2.count() == 50
-    assert len(sel._LAST_PERSISTED) == 1
-    assert sel._LAST_PERSISTED[0] is not first
-    lvl = first.storageLevel
-    assert not (lvl.useMemory or lvl.useDisk)  # evicted
-    # cleanup: leave no cached frames behind for other tests
-    while sel._LAST_PERSISTED:
-        sel._LAST_PERSISTED.pop().unpersist()

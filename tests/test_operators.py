@@ -1857,9 +1857,11 @@ def test_checkpoint_dir_scoped_per_invocation(spark, tmp_path):
     import pytest
 
     from serverless_podcast_etl_spark.operators.dedup import (
-        _materialize,
-        _resolve_checkpoint_dir,
         connected_components,
+    )
+    from serverless_podcast_etl_spark.operators.scale import (
+        materialize,
+        resolve_checkpoint_dir,
     )
 
     df = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
@@ -1869,12 +1871,12 @@ def test_checkpoint_dir_scoped_per_invocation(spark, tmp_path):
         assert any((tmp_path / sub).iterdir()), sub
 
     frame = df.select("id_a")
-    resolved = _resolve_checkpoint_dir(frame, str(tmp_path / "mine"))
+    resolved = resolve_checkpoint_dir(frame, str(tmp_path / "mine"))
     assert resolved is not None and "mine" in resolved
     # simulate a concurrent run re-pointing the shared session dir
     spark.sparkContext.setCheckpointDir(str(tmp_path / "theirs"))
     with pytest.raises(RuntimeError, match="changed mid-run"):
-        _materialize(frame, resolved)
+        materialize(frame, resolved)
 
 
 def test_winnowed_fingerprints_guarantee_and_short_docs(spark):

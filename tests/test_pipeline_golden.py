@@ -308,3 +308,19 @@ def test_partition_layout_is_pinned_at_first_write(spark, tmp_path):
         == 1
     )
     assert wh2.insert_ignore("sentence_dimension", more) == 1
+
+
+def test_insert_ignore_idempotent_under_file_uri_root(spark, tmp_path):
+    """A ``file://`` root maps to its local path, so re-delivering the
+    same batch stays a no-op; a remote scheme is refused up front
+    instead of degrading INSERT IGNORE into a blind append."""
+    from serverless_podcast_etl_spark import schemas
+
+    rows = [(i, f"title {i}", None) for i in range(5)]
+    batch = spark.createDataFrame(rows, schemas.PODCAST_DIM)
+    wh = Warehouse(spark, (tmp_path / "wh_uri").as_uri())
+    assert wh.insert_ignore("podcast_dimension", batch) == 5
+    assert wh.insert_ignore("podcast_dimension", batch) == 0
+    assert wh.read("podcast_dimension").count() == 5
+    with pytest.raises(ValueError, match="file: URIs"):
+        Warehouse(spark, "s3a://bucket/warehouse")

@@ -195,6 +195,28 @@ def test_q62_exact_baseline_materialized_once(spark, sf_dir):
     assert "ExistingRDD" in plan
 
 
+def test_q62_failed_fit_joins_checkpoint_thread(spark, sf_dir, monkeypatch):
+    """The exact-scorer checkpoint runs on a side thread while the
+    k-means fit runs on the caller's: a failing fit must propagate
+    its error only after that thread is joined, so no thread
+    outlives the call."""
+    import threading
+
+    from serverless_podcast_etl_spark.operators import similarity
+
+    def failing_fit(*args, **kwargs):
+        raise RuntimeError("fit failed")
+
+    monkeypatch.setattr(similarity, "train_ivf_centroids", failing_fit)
+    before = set(threading.enumerate())
+    with pytest.raises(RuntimeError, match="fit failed"):
+        CATALOG["q62_ann_recall_panel"].fn(spark, sf_dir)
+    leaked = [
+        t for t in threading.enumerate() if t not in before and t.is_alive()
+    ]
+    assert not leaked, leaked
+
+
 def test_band_index_join_shuffles_batch_side_only(spark, sf_dir):
     """The incremental-admission candidate join against a PERSISTED
     minhash band index (bucketed on the join key) must not shuffle the
